@@ -105,10 +105,6 @@ _VERB_PREPS = {"prompt": {"from"}, "fight": {"with", "on"},
                "donate": {"to"}, "contribute": {"to"}, "lend": {"to"}}
 
 
-def _is_verb_tag(t: str) -> bool:
-    return t.startswith("VB") or t == "MD"
-
-
 def parse_sentence_deps(tokens: List[Token], tags: List[Tagged], lo: int, hi: int,
                         ) -> List[Tuple[int, int, str]]:
     """Parse tokens[lo:hi] (one sentence) into (head, dependent, label)

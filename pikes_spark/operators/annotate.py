@@ -10,9 +10,10 @@ Idiomatic-Spark notes:
   PropBank/PredicateMatrix singletons (PropBank.java:23-60).
 - The length guard + language filter are plain Catalyst filters and
   push down to the parquet/Iceberg scan.
-- Per-document cost varies with text length; callers can
-  ``repartitionByRange`` on ``length(text)`` to even out batches
-  (SURVEY.md §4 skew note).
+- Per-document cost varies with text length. Hash-partition on the
+  unique ``url`` to even out batches (SURVEY.md §4 skew note);
+  range-partitioning on ``length(text)`` was measured worse, because
+  lengths cluster and the ranges skew (pipeline.py, resume path).
 - Error isolation: per-row try/except, failures emitted to an error
   side-channel column (reference catches per document,
   RDFGenerator.java:419-423).
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.htmltext import MAX_TEXT_LEN, extract_text
 from ..functions.nlp import annotate_document
+from .canonicalize import broadcast_if_small
 from .distill import Distiller, distill_document  # noqa: F401 (distill_document re-exported)
 
 # FIXTURES.md §2 annotations schema
@@ -178,21 +180,24 @@ def distill_annotations(annotations: DataFrame,
     ann = annotations
     if links is not None:
         # materialize the per-url link lists once, then decide the join
-        # side from their OBSERVED size (canonicalize.py discipline):
-        # broadcasting keeps the fat nested annotation rows out of any
-        # exchange (measured 2x on the distill stage — the SMJ shuffled
-        # every annotation row to meet a KB-sized link table), while a
-        # corpus-scale link table (the 100 TB case) falls back to the
-        # co-partitioned shuffle join.
+        # side from their measured payload (broadcast_if_small, the size
+        # rule canonicalize uses): broadcasting keeps the fat nested
+        # annotation rows out of any exchange (measured 2x on the
+        # distill stage — the SMJ shuffled every annotation row to meet
+        # a KB-sized link table), while a corpus-scale link table (the
+        # 100 TB case) falls back to the co-partitioned shuffle join.
         grouped = (links.groupBy("url")
                    .agg(F.collect_list(F.struct("begin", "end", "uri", "score"))
                         .alias("_links"))
                    .localCheckpoint())
-        n_links = grouped.agg(
-            F.coalesce(F.sum(F.size("_links")), F.lit(0)).alias("m")
-        ).collect()[0]["m"]
-        side = F.broadcast(grouped) if n_links <= 500_000 else grouped
-        ann = ann.join(side, "url", "left")
+        # UTF-8 bytes of url and uris + 16 per link for begin/end/score
+        link_bytes = F.aggregate(
+            "_links", F.lit(0),
+            lambda acc, lk: acc + F.octet_length(lk["uri"]) + 16)
+        payload = grouped.agg(F.coalesce(
+            F.sum(F.octet_length("url") + link_bytes), F.lit(0))
+        ).collect()[0][0]
+        ann = ann.join(broadcast_if_small(grouped, payload), "url", "left")
     else:
         ann = ann.withColumn("_links", F.lit(None).cast(
             "array<struct<begin:int,end:int,uri:string,score:double>>"))
@@ -234,17 +239,6 @@ def distill_annotations(annotations: DataFrame,
             yield pa.RecordBatch.from_pylist(out, schema=out_schema)
 
     return ann.mapInArrow(gen, TRIPLES_SCHEMA)
-
-
-def _l(v):
-    if v is None:
-        return []
-    if isinstance(v, list):
-        return [dict(x) if isinstance(x, dict) else x for x in v]
-    try:
-        return [dict(x) if isinstance(x, dict) else x for x in list(v)]
-    except TypeError:
-        return []
 
 
 def _merge_links(doc: dict, links: List[dict]) -> None:

@@ -21,6 +21,11 @@ The component representative (min IRI, with DBpedia URIs ordered
 first so they win as canonical — the reference prefers DBpedia
 canonical IRIs in smushing) rewrites triple subjects/objects; final
 dropDuplicates on (s,p,o,graph) dedupes merged statements.
+
+Join sizing: ``connected_components`` alone builds the component map
+and decides, with ``broadcast_if_small``, whether it goes back as a
+broadcast side. Distill's per-url link join uses the same rule and the
+same ``BROADCAST_MAX_BYTES``.
 """
 
 from __future__ import annotations
@@ -30,8 +35,16 @@ from pyspark.sql import DataFrame, functions as F
 OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
 FOAF_NAME = "http://xmlns.com/foaf/0.1/name"
 
-# canonical-preference prefix: DBpedia URIs sort before doc-minted IRIs
-# ("\x01" < "h"), doc IRIs before entity:/surface: locals.
+# Largest join side, in UTF-8 bytes of its payload, handed back with a
+# broadcast hint (broadcast_if_small). Row counts lie for IRI strings:
+# 20M rows of 100-byte IRIs is ~2 GB and would OOM real executors as a
+# broadcast; above this the join stays a shuffle join.
+BROADCAST_MAX_BYTES = 64 * 1024 * 1024
+# connected_components runs union-find on the driver up to this many edges
+LOCAL_CC_MAX_EDGES = 2_000_000
+
+# canonical-preference prefix: DBpedia URIs ("0") sort before other
+# http:// IRIs ("1"), which sort before entity:/surface: locals ("2").
 
 
 def _rank_key(col):
@@ -53,48 +66,67 @@ def build_sameas_edges(triples: DataFrame) -> DataFrame:
     return sameas.unionByName(names)
 
 
+def broadcast_if_small(df: DataFrame, payload_bytes: int) -> DataFrame:
+    """The one size-based join decision: hint ``df`` as the broadcast
+    side when its measured payload fits ``BROADCAST_MAX_BYTES``.
+
+    Callers measure ``payload_bytes`` inside a job they already run
+    (rows already collected, or an aggregate over a checkpointed
+    frame). Catalyst cannot make this call itself: a ``createDataFrame``
+    map and the CC output have unknown size (Long.MaxValue), and
+    ``localCheckpoint`` keeps the pre-checkpoint estimate, so without
+    the hint these small sides plan as sort-merge joins that sort the
+    big side."""
+    return F.broadcast(df) if payload_bytes <= BROADCAST_MAX_BYTES else df
+
+
 def connected_components(edges: DataFrame, max_iter: int = 50,
-                         local_threshold: int = 2_000_000) -> DataFrame:
+                         local_threshold: int = LOCAL_CC_MAX_EDGES) -> DataFrame:
     """-> (node, component) via alternating large-star/small-star.
 
-    Works directly on string node ids (min() = lexicographic; the
-    ranked key makes DBpedia URIs canonical). Deterministic, converges
-    in O(log n) rounds; each round localCheckpoints to truncate lineage.
+    Works on ``_rank_key``-ranked string ids (min() = lexicographic, so
+    DBpedia URIs win as canonical) and strips the rank at the end. Only
+    merged nodes appear; a component's root maps to nothing.
 
-    Adaptive strategy (AQE-style runtime choice): when the deduped edge
-    set is below ``local_threshold`` rows, union-find on the driver is
-    orders of magnitude cheaper than 2 log(n) shuffle rounds — the same
-    result, picked at runtime from the observed edge count. The
-    distributed star path is what runs at corpus scale (and is what the
-    stress tests exercise with local_threshold=0).
-    """
-    # size probe is a counted AGGREGATE (one cheap job that moves a single
-    # long to the driver), not a limit-collect of edge rows — IRI strings
-    # are only pulled to the driver once the count proves the edge set is
-    # small enough for the union-find fast path. The threshold matters:
-    # below it, CC is one collect + one createDataFrame; above it, the
-    # star iterations run a dozen small latency-bound shuffle jobs whose
-    # cost is CONSTANT in core count (they only pay off when the edge set
-    # is actually big) — measured as the dominant non-scaling term when
-    # the threshold was set too low.
-    if local_threshold > 0:
-        n_edges = edges.select("src", "dst").count()
-        if n_edges <= local_threshold:
-            return _local_union_find_rows(edges.sparkSession,
-                                          edges.select("src", "dst").collect())
-    # normalize to ranked ids once; strip rank at the end
-    e = (edges
-         .select(_rank_key(F.col("src")).alias("u"), _rank_key(F.col("dst")).alias("v"))
-         .filter(F.col("u") != F.col("v"))
+    Adaptive strategy: when the edge set has at most ``local_threshold``
+    rows, union-find over the collected ranked edges on the driver is
+    orders of magnitude cheaper than 2 log(n) shuffle rounds, whose
+    dozen small latency-bound jobs cost the same at any core count.
+    Above it (and always with ``local_threshold=0``, which the stress
+    tests use) the distributed star iterations run, O(log n) rounds,
+    each round localCheckpointed to truncate lineage.
+
+    Either way the map comes back through ``broadcast_if_small``, sized
+    from work already done: the collected rows on the driver path, the
+    last convergence checksum on the star path."""
+    ranked = (edges
+              .select(_rank_key(F.col("src")).alias("u"),
+                      _rank_key(F.col("dst")).alias("v"))
+              .filter(F.col("u") != F.col("v")))
+    # the size probe is a counted aggregate (one job moving one long);
+    # IRI strings reach the driver only once it proves the set small
+    if local_threshold > 0 and edges.count() <= local_threshold:
+        comp = _union_find(ranked.collect())
+        payload = sum(len(n.encode()) + len(c.encode()) for n, c in comp)
+        return broadcast_if_small(
+            edges.sparkSession.createDataFrame(
+                comp, "node string, component string"), payload)
+
+    e = (ranked
          .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
          .distinct())
 
-    def checksum(df: DataFrame) -> int:
-        row = df.agg(F.count("*").alias("n"),
-                     F.expr("bit_xor(xxhash64(u, v))").alias("h")).collect()[0]
-        return (row["n"], row["h"])
+    def checksum(df: DataFrame):
+        # payload of the frontier (rank prefixes excluded): at the
+        # fixpoint every component is a star, one (node, root) row per
+        # merged node — the map below
+        return df.agg(
+            F.count("*").alias("n"),
+            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
+            F.coalesce(F.sum(F.octet_length("u") + F.octet_length("v") - 2),
+                       F.lit(0)).alias("bytes")).collect()[0]
 
-    prev = None
+    cs = None
     for _ in range(max_iter):
         # large-star: for each node, connect strictly-larger neighbors to
         # the min of (neighborhood ∪ self)
@@ -120,34 +152,25 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
                  .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
                  .distinct())
         e = small.localCheckpoint()  # truncate lineage per frontier
-        cs = checksum(e)
-        if prev is not None and cs == prev:
+        prev, cs = cs, checksum(e)
+        if prev is not None and prev[:2] == cs[:2]:
             break
-        prev = cs
 
     comp = (e.select(F.col("u").alias("node"), F.col("v").alias("component"))
             .groupBy("node").agg(F.min("component").alias("component")))
     # strip the rank prefix
     strip = lambda c: F.substring(c, 2, 1_000_000)
-    return comp.select(strip(F.col("node")).alias("node"),
-                       strip(F.col("component")).alias("component"))
+    return broadcast_if_small(
+        comp.select(strip(F.col("node")).alias("node"),
+                    strip(F.col("component")).alias("component")),
+        (cs or checksum(e))["bytes"])
 
 
-def _local_union_find(edges: DataFrame) -> DataFrame:
-    """Driver-side union-find with the same ranked canonical preference."""
-    return _local_union_find_rows(edges.sparkSession,
-                                  edges.select("src", "dst").collect())
-
-
-def _local_union_find_rows(spark, rows) -> DataFrame:
-
-    def rank(x: str) -> str:
-        if x.startswith("http://dbpedia.org/"):
-            return "0" + x
-        if x.startswith("http://"):
-            return "1" + x
-        return "2" + x
-
+def _union_find(pairs) -> list:
+    """Driver-side union-find over ranked (u, v) ids -> (node, root)
+    for every non-root node, rank prefixes stripped. Each union keeps
+    the smaller ranked root, so a root is its component's minimum —
+    the same canonical choice as the star path."""
     parent: dict = {}
 
     def find(x):
@@ -158,23 +181,14 @@ def _local_union_find_rows(spark, rows) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra == rb:
-            return
-        # smaller ranked key becomes the root (canonical)
-        if rank(ra) <= rank(rb):
-            parent[rb] = ra
-        else:
-            parent[ra] = rb
-
-    for r in rows:
-        union(r["src"], r["dst"])
-    nodes = set(parent) | {r["src"] for r in rows} | {r["dst"] for r in rows}
-    out = [(n, c) for n, c in ((n, find(n)) for n in nodes) if n != c]
-    if not out:
-        return spark.createDataFrame([], "node string, component string")
-    return spark.createDataFrame(out, "node string, component string")
+    for u, v in pairs:
+        ru, rv = find(u), find(v)
+        if ru < rv:
+            parent[rv] = ru
+        elif rv < ru:
+            parent[ru] = rv
+    # only merged nodes ever get a parent entry
+    return [(n[1:], find(n)[1:]) for n in list(parent)]
 
 
 def dissolve_composites(triples: DataFrame) -> DataFrame:
@@ -225,51 +239,25 @@ def canonicalize_triples(triples: DataFrame, max_iter: int = 50,
     """Rewrite subjects/objects to canonical representatives and dedupe.
 
     The canonical map is small relative to the triple table (only
-    merged instances appear) -> broadcast join both rewrites."""
+    merged instances appear); whether both rewrites broadcast it is
+    decided in ``connected_components`` (``broadcast_if_small``), the
+    one size rule shared with distill's link join."""
     if dissolve_includes:
         triples = dissolve_composites(triples)
-    # materialize the edge set once: the size probe AND the collect (or
-    # the star iterations) each re-ran the dissolve joins + explodes
+    # materialize the edge set once: the CC size probe AND its collect
+    # (or the star iterations) each re-ran the dissolve joins + explodes
     # over the full triple table otherwise — one full pass saved per
     # run. The edge set is sameAs/name-sized, far below the table.
     edges = build_sameas_edges(triples).localCheckpoint()
-    # size probe (counted aggregate, one cheap job): small edge sets
-    # take the driver union-find fast path — and then the canonical
-    # map is KNOWN small (driver-built from those same edges), so the
-    # byte-stats job below is skipped entirely. Fixed per-job latency
-    # is the dominant non-scaling term of J4 on short runs.
-    n_edges = edges.count()
-    driver_path = n_edges <= 2_000_000
-    if driver_path:
-        comp = _local_union_find_rows(triples.sparkSession,
-                                      edges.select("src", "dst").collect())
-    else:
-        comp = connected_components(edges, max_iter=max_iter,
-                                    local_threshold=0)
+    # the map's broadcast hint (if any) survives the filter/withColumn
+    # and renames below: both rewrites stay broadcast hash joins
+    mapping = connected_components(edges, max_iter=max_iter)
     # drop synthetic surface hubs from the mapping domain
-    comp = comp.filter(~F.col("node").startswith("surface:"))
-    comp = comp.withColumn(
+    mapping = mapping.filter(~F.col("node").startswith("surface:"))
+    mapping = mapping.withColumn(
         "component",
         F.when(F.col("component").startswith("surface:"), F.col("node"))
         .otherwise(F.col("component")))
-
-    # The canonical map is tiny relative to the triple table (merged
-    # instances only). Statistics on it are unknown to Catalyst (it comes
-    # out of the iterative CC), so AQE sometimes plans a sort-merge join
-    # that sorts the FULL triple table twice — measured 10x slower.
-    # Decide explicitly from the observed BYTE size (row counts lie for
-    # IRI strings: 20M rows of 100-byte IRIs is ~2 GB and would OOM real
-    # executors as a broadcast): broadcast under 64 MB of string payload,
-    # shuffle join above it (the 10^12-document path).
-    mapping = comp
-    if driver_path:
-        mapping = F.broadcast(mapping)
-    else:
-        stats = comp.agg(
-            F.coalesce(F.sum(F.length("node") + F.length("component")),
-                       F.lit(0)).alias("bytes")).collect()[0]
-        if stats["bytes"] <= 64 * 1024 * 1024:
-            mapping = F.broadcast(mapping)
     rewritten = (triples
                  .join(mapping.withColumnRenamed("node", "subject")
                        .withColumnRenamed("component", "_cs"), "subject", "left")

@@ -98,8 +98,12 @@ def link_entities(annotations: DataFrame, candidates: DataFrame,
     stop = F.array(*[F.lit(s) for s in sorted(LINKING_STOPWORDS)])
     mentions = mentions.filter(~F.array_contains(stop, F.col("surface")))
     joined = mentions.join(F.broadcast(candidates), "surface", "inner")
-    # context similarity: |candidate ctx ∩ doc tokens| / |ctx|
-    overlap = F.size(F.array_intersect("ctx", "doc_tokens")) / F.size("ctx")
+    # context similarity: |candidate ctx ∩ doc tokens| / |ctx|; a URI
+    # whose localname yields no ctx words (one ending in "/" or "_")
+    # scores by prior alone instead of dividing by zero (ANSI mode)
+    overlap = F.when(F.size("ctx") > 0,
+                     F.size(F.array_intersect("ctx", "doc_tokens"))
+                     / F.size("ctx")).otherwise(F.lit(0.0))
     # project BEFORE the exchange: doc_tokens/ctx are consumed by the
     # score expression map-side; shipping them through the per-span
     # shuffle was the measured cost of this stage (every candidate row

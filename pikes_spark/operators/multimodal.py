@@ -1,5 +1,5 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
-decode / feature-extract / resize / frame-sample as mapInPandas stages.
+decode / feature-extract / frame-sample as mapInPandas stages.
 
 Round 2: the IMAGE and AUDIO decode steps are REAL stdlib codecs —
 images are actual PNG files (filter-0 subset, written and parsed with
@@ -190,17 +190,6 @@ def extract_features(media: DataFrame, frame_stride_ms: int = 1000) -> DataFrame
                                              "sha256", "feat", "frames"])
 
     return media.repartition("media_id").mapInPandas(gen, FEATURES_SCHEMA)
-
-
-def resize_images(media: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize metadata transform (geometry math; pixel resampling via
-    numpy slicing happens inside the decode UDF at deployment)."""
-    scale = F.when(
-        F.greatest("width", "height") > max_side,
-        max_side / F.greatest("width", "height")).otherwise(F.lit(1.0))
-    return (media.filter(F.col("kind") == "image")
-            .withColumn("out_width", F.floor(F.col("width") * scale).cast("int"))
-            .withColumn("out_height", F.floor(F.col("height") * scale).cast("int")))
 
 
 # ---------------------------------------------------------------------------

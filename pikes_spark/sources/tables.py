@@ -43,7 +43,8 @@ class SnapshotTable:
     # ------------------------------------------------------------------
     def _manifests(self) -> List[str]:
         meta = os.path.join(self.root, "meta")
-        return sorted(f for f in os.listdir(meta) if f.startswith("snapshot-"))
+        return sorted(f for f in os.listdir(meta)
+                      if f.startswith("snapshot-") and f.endswith(".json"))
 
     def latest_snapshot(self) -> Optional[dict]:
         ms = self._manifests()
@@ -58,10 +59,29 @@ class SnapshotTable:
         """Write df as a new snapshot (previous snapshot's files + the
         new data dir). Sort-within-partitions by the table sort order
         (spo/pos layout) before writing."""
+        return self._commit(df, lineage, replace=False)
+
+    def overwrite(self, df: DataFrame, spark: SparkSession,
+                  lineage: Optional[dict] = None) -> dict:
+        """Commit a snapshot that REPLACES the table contents (manifest
+        points only at the new data dir; older snapshots stay readable
+        by their own manifests — Iceberg overwrite semantics)."""
+        return self._commit(df, lineage, replace=True)
+
+    def _commit(self, df: DataFrame, lineage: Optional[dict],
+                replace: bool) -> dict:
+        """Write the data dir, build the manifest once and publish it
+        with one rename — the commit point. Until the rename, readers
+        see the previous snapshot; if any step fails, the temp manifest
+        and the new data dir are removed and the previous snapshot
+        stays the latest."""
+        import shutil
+
         from pyspark.sql import Observation
 
         snap_id = uuid.uuid4().hex[:12]
         data_dir = os.path.join(self.root, "data", snap_id)
+        tmp = os.path.join(self.root, "meta", f".tmp-{snap_id}.json")
         out = df
         if self.sort_cols:
             out = out.sortWithinPartitions(*self.sort_cols)
@@ -70,47 +90,40 @@ class SnapshotTable:
         # read-back scan (the reference's Tracker -> observe() mapping)
         obs = Observation(f"append_{snap_id}")
         out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
-        # zstd: ~30-50% smaller than snappy on IRI-heavy triple data at
-        # comparable write cost — at 10^12 triples the scan economics
-        # dominate, and the sorted layout compresses especially well
-        out.write.mode("errorifexists").option("compression", "zstd")            .parquet(data_dir)
-        stats = {"rows": obs.get["rows"]}
-        prev = self.latest_snapshot()
-        manifest = {
-            "table": self.name,
-            "snapshot_id": snap_id,
-            "parent": prev["snapshot_id"] if prev else None,
-            "sequence": (prev["sequence"] + 1) if prev else 0,
-            "data_dirs": (prev["data_dirs"] if prev else []) + [data_dir],
-            "added_rows": stats["rows"],
-            "total_rows": (prev["total_rows"] if prev else 0) + stats["rows"],
-            "write_seconds": round(time.time() - t0, 3),
-            "lineage": lineage or {},
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        tmp = os.path.join(self.root, "meta", f".tmp-{snap_id}.json")
-        final = os.path.join(self.root, "meta",
-                             f"snapshot-{manifest['sequence']:06d}-{snap_id}.json")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh, indent=1)
-        os.rename(tmp, final)  # atomic commit point
-        return manifest
-
-    def overwrite(self, df: DataFrame, spark: SparkSession,
-                  lineage: Optional[dict] = None) -> dict:
-        """Commit a snapshot that REPLACES the table contents (manifest
-        points only at the new data dir; older snapshots stay readable
-        by their own manifests — Iceberg overwrite semantics)."""
-        manifest = self.append(df, spark, lineage=lineage)
-        manifest["data_dirs"] = manifest["data_dirs"][-1:]
-        manifest["total_rows"] = manifest["added_rows"]
-        final = os.path.join(
-            self.root, "meta",
-            f"snapshot-{manifest['sequence']:06d}-{manifest['snapshot_id']}.json")
-        tmp = final + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh, indent=1)
-        os.rename(tmp, final)
+        try:
+            # zstd: ~30-50% smaller than snappy on IRI-heavy triple data
+            # at comparable write cost — at 10^12 triples the scan
+            # economics dominate, and the sorted layout compresses
+            # especially well
+            out.write.mode("errorifexists").option("compression", "zstd") \
+                .parquet(data_dir)
+            rows = obs.get["rows"]
+            prev = self.latest_snapshot()
+            base = None if replace else prev
+            manifest = {
+                "table": self.name,
+                "snapshot_id": snap_id,
+                "parent": prev["snapshot_id"] if prev else None,
+                "sequence": (prev["sequence"] + 1) if prev else 0,
+                "data_dirs": (base["data_dirs"] if base else []) + [data_dir],
+                "added_rows": rows,
+                "total_rows": (base["total_rows"] if base else 0) + rows,
+                "write_seconds": round(time.time() - t0, 3),
+                "lineage": lineage or {},
+                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ",
+                                              time.gmtime()),
+            }
+            final = os.path.join(
+                self.root, "meta",
+                f"snapshot-{manifest['sequence']:06d}-{snap_id}.json")
+            with open(tmp, "w") as fh:
+                json.dump(manifest, fh, indent=1)
+            os.rename(tmp, final)  # atomic commit point
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            shutil.rmtree(data_dir, ignore_errors=True)
+            raise
         return manifest
 
     def has_lineage(self, key: str, value) -> bool:

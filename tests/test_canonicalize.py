@@ -1,11 +1,13 @@
 """Connected-components stress tests (FIXTURES.md §5): chain, star/skew
 hub, disconnected pairs, cycle."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
 from pikes_spark.operators.canonicalize import (
-    build_sameas_edges, canonicalize_triples, connected_components)
+    OWL_SAMEAS, build_sameas_edges, canonicalize_triples, connected_components)
 
 
 def _cc(spark, pairs, local_threshold=0):
@@ -48,21 +50,32 @@ def test_cc_star_hub_skew(spark):
     assert len({m[f"leaf{i:05d}"] for i in range(2000)}) == 1
 
 
-def test_cc_disconnected_pairs_and_cycle(spark):
+# 0 runs the distributed star path, 10**9 the driver union-find
+BOTH_PATHS = pytest.mark.parametrize("local_threshold", [0, 10**9])
+
+
+@BOTH_PATHS
+def test_cc_disconnected_pairs_and_cycle(spark, local_threshold):
     pairs = [("a1", "a2"), ("b1", "b2"),
              ("c1", "c2"), ("c2", "c3"), ("c3", "c1")]  # cycle
-    m = _cc(spark, pairs)
+    m = _cc(spark, pairs, local_threshold)
     nodes = {"a1", "a2", "b1", "b2", "c1", "c2", "c3"}
     comps = comp_sets(m, nodes)
     assert comps == [("a1", "a2"), ("b1", "b2"), ("c1", "c2", "c3")]
+    # the map holds merged nodes only, each pointing at its minimum
+    assert m == {"a2": "a1", "b2": "b1", "c2": "c1", "c3": "c1"}
 
 
-def test_cc_dbpedia_uri_wins_as_canonical(spark):
+@BOTH_PATHS
+def test_cc_dbpedia_uri_wins_as_canonical(spark, local_threshold):
     pairs = [("http://example.org/doc/1#Bush", "http://dbpedia.org/resource/George_W._Bush"),
-             ("http://example.org/doc/2#Bush", "http://dbpedia.org/resource/George_W._Bush")]
-    m = _cc(spark, pairs)
-    assert m["http://example.org/doc/1#Bush"] == "http://dbpedia.org/resource/George_W._Bush"
-    assert m["http://example.org/doc/2#Bush"] == "http://dbpedia.org/resource/George_W._Bush"
+             ("http://example.org/doc/2#Bush", "http://dbpedia.org/resource/George_W._Bush"),
+             # rank order beats plain string order: dbpedia < http < local
+             ("e:bush", "http://example.org/doc/1#Bush")]
+    m = _cc(spark, pairs, local_threshold)
+    assert m == {"http://example.org/doc/1#Bush": "http://dbpedia.org/resource/George_W._Bush",
+                 "http://example.org/doc/2#Bush": "http://dbpedia.org/resource/George_W._Bush",
+                 "e:bush": "http://dbpedia.org/resource/George_W._Bush"}
 
 
 def test_canonicalize_triples_merges_surface_forms(spark):
@@ -113,6 +126,55 @@ def test_canonicalize_preserves_preexisting_self_loops(spark):
                for s, p, o in loops)
     # the collapsed cross edge is gone
     assert not any(p == "p:knows" for _, p, _ in loops)
+
+
+def test_size_rule_does_not_change_rows(spark, monkeypatch):
+    """BROADCAST_MAX_BYTES = 0 turns every sized join (the canonical
+    map, distill's per-url link lists) into a shuffle join; the rows
+    must not change."""
+    from pikes_spark.operators import canonicalize
+    from pikes_spark.operators.annotate import annotate_pages, distill_annotations
+    from pikes_spark.operators.linking import candidates_df, link_entities
+    from pikes_spark.sources.pages import html_col
+
+    triples = spark.createDataFrame([
+        ("u1", "http://e/1#US", "http://xmlns.com/foaf/0.1/name",
+         "United States", "", "attribute"),
+        ("u2", "http://e/2#US", "http://xmlns.com/foaf/0.1/name",
+         "United States", "", "attribute"),
+        ("u1", "http://e/1#US", "rdf:type", "T", "g1", "instance"),
+        ("u2", "http://e/2#US", "p:near", "http://e/2#CA", "g2", "instance"),
+        ("u2", "http://e/2#CA", OWL_SAMEAS,
+         "http://dbpedia.org/resource/Canada", "", "instance"),
+    ], "url string, subject string, predicate string, object string, "
+       "graph string, component string")
+    pages = spark.createDataFrame([
+        ("http://e/d1", "George Bush visited Paris and met officials."),
+        ("http://e/d2", "The mayor praised New York City officials.")],
+        "url string, text string").select(
+        "url", html_col(F.col("text")).alias("html"), "text",
+        F.lit("en").alias("lang"))
+    ann = annotate_pages(pages).localCheckpoint()
+    links = link_entities(ann, candidates_df(spark))
+
+    def run():
+        canon = canonicalize.canonicalize_triples(triples) \
+            .select(*triples.columns)
+        plan = canon._jdf.queryExecution().executedPlan().toString()
+        return (Counter(map(tuple, canon.collect())),
+                Counter(map(tuple, distill_annotations(ann, links).collect())),
+                plan)
+
+    canon, distilled, plan = run()
+    assert "SortMergeJoin" not in plan
+    # both frames start (url, subject, predicate, object)
+    assert any(r[3] == "http://dbpedia.org/resource/Canada" for r in canon)
+    assert any("dbpedia.org/resource/Paris" in (r[3] or "")
+               for r in distilled)
+    monkeypatch.setattr(canonicalize, "BROADCAST_MAX_BYTES", 0)
+    canon0, distilled0, plan0 = run()
+    assert "SortMergeJoin" in plan0
+    assert canon0 == canon and distilled0 == distilled
 
 
 def test_include_composite_dissolution(spark):

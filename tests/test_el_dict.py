@@ -89,3 +89,31 @@ def test_open_vocab_backstop_mints_dbr(spark):
     # minted candidates never outrank dictionary hits on the same span
     assert all(r["score"] <= 0.15 + 1e-9 for r in opened
                if r["uri"] in minted)
+
+
+def test_empty_context_candidate_scores_by_prior(spark, tmp_path,
+                                                 monkeypatch):
+    """A $PIKES_EL_DICT URI whose localname yields no context words
+    (one ending in "/" or "_") scores by its prior alone; under ANSI
+    mode the context ratio used to raise DIVIDE_BY_ZERO."""
+    from pikes_spark.operators.annotate import annotate_pages
+    from pikes_spark.operators.linking import candidates_df, link_entities
+
+    f = tmp_path / "el_candidates.tsv"
+    f.write_text("zorblat industries\thttp://dbpedia.org/resource/Zorblat/\t10\n"
+                 "quuxtech holdings\thttp://dbpedia.org/resource/_\t10\n")
+    monkeypatch.setenv("PIKES_EL_DICT", str(f))
+    el_dict.reset_el_cache()
+    try:
+        cands = candidates_df(spark)
+    finally:
+        monkeypatch.delenv("PIKES_EL_DICT")
+        el_dict.reset_el_cache()
+    pages = _pages_df(spark, [
+        ("http://e/ec1", "Zorblat Industries announced a merger with "
+                         "Quuxtech Holdings yesterday.")])
+    links = {r["uri"]: r["score"]
+             for r in link_entities(annotate_pages(pages), cands).collect()}
+    assert set(links) == {"http://dbpedia.org/resource/Zorblat/",
+                          "http://dbpedia.org/resource/_"}
+    assert all(abs(s - 0.95) < 1e-9 for s in links.values())

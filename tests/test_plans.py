@@ -67,13 +67,7 @@ def test_entry_smoke(spark):
     assert set(["subject", "predicate", "object"]) <= set(df.columns)
 
 
-def test_canonicalize_single_shuffle(spark):
-    """J4 scale guard: the canonicalize output plan carries exactly ONE
-    shuffle (the final merge-dedupe) — composite dissolution is
-    broadcast+explode (narrow) and the canonical-map rewrites are
-    broadcast joins. A second Exchange here is the regression that made
-    J4 the non-scaling stage in round 3."""
-    from pikes_spark.operators.canonicalize import canonicalize_triples
+def _j4_triples(spark):
     rows = [
         ("u", "e:a", "http://www.w3.org/2002/07/owl#sameAs", "e:b", "", "sameas"),
         ("u", "e:a", "p", "o1", "g1", "edge"),
@@ -82,9 +76,19 @@ def test_canonicalize_single_shuffle(spark):
          "e:a", "", "edge"),
         ("u", "comp:1", "q", "o3", "g3", "edge"),
     ]
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "url string, subject string, predicate string, object string, "
               "graph string, component string")
+
+
+def test_canonicalize_single_shuffle(spark):
+    """J4 scale guard: the canonicalize output plan carries exactly ONE
+    shuffle (the final merge-dedupe) — composite dissolution is
+    broadcast+explode (narrow) and the canonical-map rewrites are
+    broadcast joins. A second Exchange here is the regression that made
+    J4 the non-scaling stage in round 3."""
+    from pikes_spark.operators.canonicalize import canonicalize_triples
+    df = _j4_triples(spark)
     out = canonicalize_triples(df, max_iter=4)
     plan = out._jdf.queryExecution().executedPlan().toString()
     import re
@@ -95,6 +99,29 @@ def test_canonicalize_single_shuffle(spark):
                     if "subject#" in m or "object#" in m or "url#" in m]
     assert len(big_shuffles) <= 1, plan
     assert "CartesianProduct" not in plan
+
+
+def test_canonicalize_job_count(spark):
+    """J4 job-count guard: canonicalize on the single-shuffle fixture,
+    written to the noop sink, runs at most the 13 Spark jobs it ran
+    when the CC size rule was folded into connected_components (AQE
+    submits each shuffle stage it materializes as its own job). Fixed
+    per-job latency is J4's non-scaling term on short runs."""
+    from pikes_spark.operators.canonicalize import canonicalize_triples
+    df = _j4_triples(spark)
+    sc = spark.sparkContext
+    group = "canonicalize_job_count"
+    sc.setJobGroup(group, "canonicalize job-count guard")
+    try:
+        canonicalize_triples(df, max_iter=4).write.format("noop") \
+            .mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job start events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 13, sorted(jobs)
 
 
 def test_ivf_assignment_has_no_window_exchange(spark):
